@@ -759,9 +759,9 @@ class CellTable:
                     write_xlsx_workbook as write_workbook,
                 )
 
-            _guard_xlsx_export(self.df, self.name)
             header = self.df.columns
-            body = [[row[c] for c in header] for row in self.df.collect()]
+            rows = _collect_for_xlsx_export(self.df, self.name)
+            body = [[row[c] for c in header] for row in rows]
             write_workbook({self.name: (header, body)}, path)
         else:
             raise ValueError(f"unsupported save format {fmt!r}")
@@ -899,24 +899,26 @@ class CellBase:
 
         sheets = {}
         for name, t in tables.items():
-            _guard_xlsx_export(t.df, name)
             header = t.df.columns
-            sheets[name] = (header, [[row[c] for c in header] for row in t.df.collect()])
+            rows = _collect_for_xlsx_export(t.df, name)
+            sheets[name] = (header, [[row[c] for c in header] for row in rows])
         write_workbook(sheets, path)
 
 
-def _guard_xlsx_export(df: DataFrame, name: str) -> None:
-    """Enforce the 'small only' contract of the driver-collect xlsx paths.
+def _collect_for_xlsx_export(df: DataFrame, name: str) -> list:
+    """Collect a table for the driver-side workbook writers, enforcing
+    their 'small only' contract with a checked cap.
 
-    count() before collect() costs one extra (cheap, column-pruned) job
-    and buys a crisp error instead of a driver OOM when someone points
-    the workbook exporter at a fact table."""
-    n = df.count()
-    if n > XLSX_EXPORT_MAX_ROWS:
+    One bounded collect of XLSX_EXPORT_MAX_ROWS + 1 rows: the input is
+    read once, the driver never holds more than the cap plus one row,
+    and a fact table gets a crisp error instead of a driver OOM."""
+    rows = df.limit(XLSX_EXPORT_MAX_ROWS + 1).collect()
+    if len(rows) > XLSX_EXPORT_MAX_ROWS:
         raise ValueError(
-            f"table {name!r} has {n:,} rows — the workbook export path "
-            f"collects to the driver and is capped at "
-            f"{XLSX_EXPORT_MAX_ROWS:,} rows. For large tables use the "
+            f"table {name!r} has more than {XLSX_EXPORT_MAX_ROWS:,} rows — "
+            f"the workbook export path collects to the driver and is capped "
+            f"there. For large tables use the "
             f"distributed sink: df.write.format('cellbase_xlsx')"
             f".mode('overwrite').save(dir) (one part-N.xlsx per partition)."
         )
+    return rows

@@ -25,46 +25,47 @@ from cellbase_spark.functions.exact import DEC
 import contextlib
 
 
+# Store count at which the state stage stopped improving at local[32]
+# (optimization r15/r16): the cap once a deployment has more slots.
+STATE_STORES_MAX = 8
+
+
 @contextlib.contextmanager
-def state_sized_shuffle(spark: SparkSession, target: int | str | None = None):
-    """Scope a stream's shuffle-partition count to its STATE volume.
+def state_sized_shuffle(spark: SparkSession):
+    """Scope a stream's shuffle-partition count, which is its state-store
+    count, to the task slots: min(defaultParallelism, STATE_STORES_MAX).
 
     A stateful streaming query instantiates one state-store provider per
-    shuffle partition, and every micro-batch pays open + snapshot/delta
-    maintenance + commit PER STORE — a fixed cost that has nothing to do
-    with batch compute parallelism. Sizing the store count to the core
-    count (the batch default) multiplies that fixed cost for no benefit
-    whenever state is small: measured on this repo's tumbling pipeline,
-    32 stores run the same bounded source ~2x slower than 8 (bench.py's
-    tuned row), and the 4-batch late-arrival key drops 7.8 s -> 3.9 s at
-    8 stores (optimization r15). So streaming runs declare state-sized
-    partitioning: $SPARK_GRAFT_STREAM_SHUFFLE (default 8 — generous for
-    the ~10^3-10^4 keys of the bench states) around stream start/await,
-    restoring the session value after. At deployment this is the same
-    sizing decision made explicitly: state volume / target store size
-    (~100 MB-1 GB per store), NOT the executor-core count; raise the env
-    for wide state. The state partition count is baked into a NEW
-    checkpoint at first batch; restarts from an existing checkpoint keep
-    the checkpointed count regardless, so scoping the conf to the start
-    site is both sufficient and safe.
+    shuffle partition. The cost model behind the rule:
+    - every store pays a fixed open + delta/snapshot maintenance + commit
+      + checksum cost on every micro-batch, however little state it holds;
+    - stores beyond the number of task slots run the state stage in more
+      than one wave, so each extra wave adds that fixed cost to the
+      batch latency (8 stores at local[4]: two waves per batch);
+    - stores below the number of slots leave slots idle, which starves
+      the operators that do per-row work in the state stage (Python
+      stateful processors, stream-stream joins: ~2x slower at 1 store
+      than at 4 on 4 slots).
+    So one store per slot, capped at the 8 that measured best at
+    local[32] for the ~10^3-10^4-key states of the bench streams. Wide
+    state (~100 MB-1 GB per store) would want more stores; none of the
+    engine's streams is near that.
 
-    `target` is the per-FAMILY override (r15 VERDICT task #1): state
-    shape differs by operator family — windowed aggs want few stores,
-    a stream-stream join instantiates FOUR stores per partition — so a
-    start site may size itself instead of riding the env default. The
-    env still wins the default; an explicit target wins outright.
+    The state partition count is baked into a NEW checkpoint at its
+    first batch; restarts from an existing checkpoint keep the
+    checkpointed count whatever this scope says, so scoping the conf to
+    the start site is both sufficient and safe.
 
     SINGLE-THREADED ASSUMPTION (same contract as operators/ckpt.py): the
     conf is session-global, so any batch query planned concurrently in
     the same session during the stream's run would silently inherit the
-    reduced partition count, and nested/concurrent uses could restore a
+    stream's partition count, and nested/concurrent uses could restore a
     clobbered value. Every engine surface (driver contract, bench,
     check_oracle, tests) starts and awaits streams sequentially."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if target is None:
-        target = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+    stores = min(spark.sparkContext.defaultParallelism, STATE_STORES_MAX)
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
+        spark.conf.set("spark.sql.shuffle.partitions", str(stores))
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -118,7 +119,6 @@ def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_shuffle: int | str | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion over its (bounded)
     source and return the materialized result: availableNow trigger +
@@ -130,7 +130,7 @@ def run_stream_to_memory(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    with state_sized_shuffle(spark, state_shuffle):
+    with state_sized_shuffle(spark):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)

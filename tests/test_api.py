@@ -271,6 +271,33 @@ def test_xlsx_export_guard_rejects_fact_tables(spark, sf_dir, tmp_path, monkeypa
     cb.table("region").save(str(tmp_path / "region.xlsx"), fmt="xlsx")
 
 
+def test_xlsx_export_cap_is_exact(spark, sf_dir, tmp_path, monkeypatch):
+    """The export cap is a checked bound, not an estimate: a table of
+    exactly XLSX_EXPORT_MAX_ROWS rows is written whole, by both save()
+    and export_workbook; one row over the cap raises."""
+    import pytest
+
+    import cellbase_spark.api as api_mod
+    from cellbase_spark import schemas
+
+    cb = CellBase(spark, sf_dir)
+    nation = cb.table("nation")
+    n = nation.count()
+
+    monkeypatch.setattr(api_mod, "XLSX_EXPORT_MAX_ROWS", n - 1)
+    with pytest.raises(ValueError, match=f"more than {n - 1:,} rows"):
+        nation.save(str(tmp_path / "over.xlsx"), fmt="xlsx")
+
+    monkeypatch.setattr(api_mod, "XLSX_EXPORT_MAX_ROWS", n)
+    want = {r["n_nationkey"]: r["n_name"] for r in nation.rows()}
+    one, wb = str(tmp_path / "at_cap.xlsx"), str(tmp_path / "at_cap_wb.xlsx")
+    nation.save(one, fmt="xlsx")
+    cb.export_workbook({"nation": nation}, wb)
+    for path in (one, wb):
+        back = cb.import_workbook(path, {"nation": schemas.NATION})["nation"]
+        assert {r["n_nationkey"]: r["n_name"] for r in back.rows()} == want
+
+
 def test_duplicated_spans_api(spark):
     """duplicated_spans finds the shared 4-token span across two rows and
     excludes spans unique to one row; counts and min_key are exact."""

@@ -213,6 +213,96 @@ def test_file_sink_with_checkpoint_resumes(spark, stream_dir, tmp_path):
     assert ids == [1, 2]  # batch 1 exactly once, batch 2 picked up
 
 
+def _state_stores(spark) -> int:
+    return min(spark.sparkContext.defaultParallelism, pipelines.STATE_STORES_MAX)
+
+
+def test_state_sized_shuffle_scopes_partitions_to_slots(spark):
+    """Inside the scope the shuffle-partition count is one state store per
+    task slot, capped; on exit the previous value comes back, also when
+    the body raises."""
+    key = "spark.sql.shuffle.partitions"
+    outer = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "13")
+        with pipelines.state_sized_shuffle(spark):
+            assert spark.conf.get(key) == str(_state_stores(spark))
+        assert spark.conf.get(key) == "13"
+
+        with pytest.raises(RuntimeError, match="boom"):
+            with pipelines.state_sized_shuffle(spark):
+                assert spark.conf.get(key) == str(_state_stores(spark))
+                raise RuntimeError("boom")
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, outer)
+
+
+def test_restart_keeps_checkpointed_state_partitions(spark, stream_dir, sf_dir, tmp_path):
+    """A watermarked tumbling count checkpointed under one partition count
+    restarts on the same checkpoint inside state_sized_shuffle (a
+    different count): the restarted query keeps the checkpointed count,
+    carries the first file's state, and its complete output equals the
+    batch aggregate of both files."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    events = events.take(pc.sort_indices(events, [("ts", "ascending")]))
+    half = events.num_rows // 2
+    ckpt = str(tmp_path / "ckpt")
+    key = "spark.sql.shuffle.partitions"
+    explicit = _state_stores(spark) + 1
+
+    def start():
+        return (
+            pipelines.tumbling_agg(
+                pipelines.with_watermark(pipelines.read_events_stream(spark, stream_dir))
+            )
+            .writeStream.format("memory")
+            .queryName("restart_sink")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    def state_partitions(q) -> int:
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    # the second file is all later than the first: no row is late
+    pq.write_table(events.slice(0, half), f"{stream_dir}/part1.parquet")
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(explicit))
+    try:
+        q = start()
+        try:
+            q.processAllAvailable()
+            assert state_partitions(q) == explicit
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, prev)
+
+    pq.write_table(events.slice(half), f"{stream_dir}/part2.parquet")
+    with pipelines.state_sized_shuffle(spark):
+        q = start()
+        try:
+            q.processAllAvailable()
+            assert state_partitions(q) == explicit
+        finally:
+            q.stop()
+
+    got = {
+        (r["wstart"], r["event_type"]): (r["n"], r["total"])
+        for r in spark.table("restart_sink").collect()
+    }
+    want = {
+        (r["wstart"], r["event_type"]): (r["n"], r["total"])
+        for r in pipelines.tumbling_agg(spark.read.parquet(stream_dir)).collect()
+    }
+    assert got == want
+
+
 def test_stream_static_join(spark, stream_dir, sf_dir):
     """T6: a streaming events feed joins the static customer dim per
     micro-batch — the enrichment join of every event pipeline. The static
