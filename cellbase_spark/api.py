@@ -857,17 +857,15 @@ class CellBase:
         workbook file(s) at `path` becomes a CellTable, typed by its
         declared schema — the full 'author tables in spreadsheet software,
         load them as a database' loop. Each sheet stays an independent
-        lazy distributed scan. fmt='xlsx' (sources/excel.read_workbook)
-        or 'ods' (sources/ods.read_ods_workbook — the LibreOffice half,
-        round 12)."""
-        if fmt == "ods":
-            from cellbase_spark.sources.ods import read_ods_workbook as read_wb
-        elif fmt == "xlsx":
-            from cellbase_spark.sources.excel import read_workbook as read_wb
-        else:
-            raise ValueError(f"unsupported workbook format {fmt!r}")
+        lazy distributed scan through the one spreadsheet reader,
+        sources/grid.read_workbook; fmt='xlsx' or 'ods' (the LibreOffice
+        half). `path` is one workbook file or a directory of them; no
+        matching file raises FileNotFoundError."""
+        from cellbase_spark.sources.grid import read_workbook
 
-        dfs = read_wb(self.spark, path, sheet_schemas, schema_mode=schema_mode)
+        dfs = read_workbook(
+            self.spark, path, sheet_schemas, fmt, schema_mode=schema_mode
+        )
         key_cols = key_cols or {}
         return {
             name: CellTable(df, name, key_cols.get(name))

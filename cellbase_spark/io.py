@@ -39,10 +39,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 # fan_out's partition-count probes memoized per (session, analyzed-plan
 # semanticHash) via memo.session_memo (WeakKey — entries die with the
 # session, so a recycled id() can never alias a dead session's counts;

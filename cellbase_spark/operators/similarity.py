@@ -152,72 +152,6 @@ def knn_join(
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
-def knn_join_dense(
-    embeddings: DataFrame,
-    k: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bucket_col: str = "label",
-) -> DataFrame:
-    """knn_join's Arrow fast path: per-bucket pairwise distances as a
-    vectorized numpy kernel under applyInPandas.
-
-    Dense linear algebra is the one workload where the codegen'd
-    aggregate() fold loses to the Python worker (per-pair lambda calls
-    vs one (n, n) matrix op per dimension) — measured 3.4 s -> sub-second
-    at sf0.1. Bit-parity with the SQL/DuckDB fold is preserved by
-    construction: the kernel accumulates acc += (x_i - y_i)^2 one
-    DIMENSION at a time, left to right, so every partial sum is the same
-    IEEE double the sequential fold produces (numpy's pairwise-summing
-    np.sum/cdist would NOT be). Ranking reproduces ORDER BY dist2, b_id
-    via np.lexsort inside the kernel — the k results per probe leave the
-    worker pre-ranked, so no post-shuffle window is needed.
-
-    Scale: one shuffle on bucket_col; each bucket's (n_b, dim) block must
-    fit a worker's memory — for 100 TB corpora sub-bucket (IVF-style)
-    first, or fall back to knn_join's spillable join form.
-    """
-    import numpy as np
-    import pandas as pd
-
-    out_schema = "a_id long, b_id long, bkt int, dist2 double, rk int"
-
-    def per_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ids = pdf[id_col].to_numpy()
-        v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        n, dim = v.shape
-        acc = np.zeros((n, n), dtype=np.float64)
-        for i in range(dim):  # dimension-ordered: the SQL fold's order
-            d = v[:, i, None] - v[None, :, i]
-            acc += d * d
-        dist = np.round(acc, 6)
-        np.fill_diagonal(dist, np.inf)  # a_id <> b_id
-        kk = min(k, n - 1)
-        if kk <= 0:
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in
-                 [("a_id", "int64"), ("b_id", "int64"), ("bkt", "int32"),
-                  ("dist2", "float64"), ("rk", "int32")]}
-            )
-        rows = []
-        bkt = int(pdf[bucket_col].iloc[0])
-        for a in range(n):
-            order = np.lexsort((ids, dist[a]))[:kk]
-            for r, b in enumerate(order, start=1):
-                rows.append((int(ids[a]), int(ids[b]), bkt, float(dist[a][b]), r))
-        return pd.DataFrame(rows, columns=["a_id", "b_id", "bkt", "dist2", "rk"])
-
-    return (
-        embeddings.select(
-            F.col(id_col).alias(id_col),
-            F.col(bucket_col).alias(bucket_col),
-            F.col(vec_col).alias(vec_col),
-        )
-        .groupBy(bucket_col)
-        .applyInPandas(per_bucket, out_schema)
-    )
-
-
 def knn_join_smj(
     embeddings: DataFrame,
     k: int = 3,
@@ -230,7 +164,7 @@ def knn_join_smj(
     join (merge hint), whose per-key match buffer spills to disk — a
     bucket larger than executor memory still completes, where a broadcast
     build side would OOM. Scoring stays the codegen'd sequential fold
-    (bit-identical to knn_join/knn_join_dense), ranking is the same
+    (bit-identical to knn_join/knn_join_dense_sub), ranking is the same
     window, so all three forms hash-match the same oracle."""
     sq = (
         f"aggregate(zip_with(a_vec, b_vec,"
@@ -261,9 +195,12 @@ def knn_join_dense_sub(
     id_col: str = "vec_id",
     bucket_col: str = "label",
 ) -> DataFrame:
-    """knn_join_dense with the worker-memory cap the plain dense kernel
-    lacks: each applyInPandas group used to be a whole bucket, holding an
-    (n_b, n_b) distance matrix — quadratic in bucket size. Here the probe
+    """knn_join's Arrow fast path: pairwise distances as a vectorized
+    numpy kernel under cogroup.applyInPandas, with a bounded worker
+    memory. Dense linear algebra is the one workload where the codegen'd
+    aggregate() fold loses to the Python worker (per-pair lambda calls vs
+    one matrix op per dimension). A whole-bucket group would hold an
+    (n_b, n_b) distance matrix — quadratic in bucket size — so the probe
     rows are sliced into n_sub sub-buckets by id hash and the build rows
     replicated into every slice (explode over sequence), then the two
     sides are cogrouped on (bucket, slice): the worker's matrix is

@@ -12,7 +12,7 @@ reference user's whole loop through the facade verbs only:
     against a parquet fact table.
 
 Every step delegates to an already-gated operator (ensure_bucketed_table,
-write_ods_workbook/read_ods_workbook, the join/agg built-ins), so the
+write_ods_workbook/grid.read_workbook, the join/agg built-ins), so the
 value of this key is the COMPOSITION: the facade's glue — key-column
 plumbing, workbook dict round-trip, CellTable wrapping — sits under the
 driver's hash gate, not just unit asserts.

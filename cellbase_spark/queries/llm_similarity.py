@@ -19,8 +19,6 @@ from cellbase_spark.operators.similarity import (
     cosine_topk,
     dot_expr,
     ivf_assign,
-    knn_join,
-    knn_join_dense,
     knn_join_dense_sub,
     knn_join_smj,
     lsh_bucket_expr,

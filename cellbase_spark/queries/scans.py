@@ -186,19 +186,21 @@ def q_scan_excel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Excel round-trip — the reference's native format (SURVEY.md §2.1 S4,
     previously out-of-scope; now in via the stdlib-only xlsx source in
     sources/excel.py): export nation to an .xlsx workbook, re-ingest it
-    distributed (binaryFile + mapInPandas XML parse), cells coerced to the
-    declared schema. Oracle compares against the original table."""
-    from cellbase_spark.sources.excel import read_excel_table, write_xlsx
+    distributed (binaryFile + mapInPandas XML parse, sources/grid.py),
+    cells coerced to the declared schema. Oracle compares against the
+    original table."""
+    from cellbase_spark.sources.excel import write_xlsx
+    from cellbase_spark.sources.grid import read_sheet_table
 
     n = load_table(spark, sf_dir, "nation")
-    # Fresh private dir per call: read_excel_table scans the whole
+    # Fresh private dir per call: read_sheet_table scans the whole
     # directory via binaryFile, so a shared fixed path would race with a
     # concurrent run (or union in stray .xlsx) and break the hash.
     out_dir = tempfile.mkdtemp(prefix="cellbase_spark_xlsx_")
     rows = [[r["n_nationkey"], r["n_name"], r["n_regionkey"]] for r in n.collect()]
     write_xlsx(rows, os.path.join(out_dir, "nation.xlsx"),
                header=["n_nationkey", "n_name", "n_regionkey"])
-    return read_excel_table(spark, out_dir, schemas.NATION)
+    return read_sheet_table(spark, out_dir, schemas.NATION, "xlsx")
 
 
 @register(
@@ -217,7 +219,8 @@ def q_scan_workbook(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed per sheet), and joins the two sheets — proving each named
     sheet round-trips as an independent typed table. Oracle: the same
     join on the original parquet tables."""
-    from cellbase_spark.sources.excel import read_workbook, write_xlsx_workbook
+    from cellbase_spark.sources.excel import write_xlsx_workbook
+    from cellbase_spark.sources.grid import read_workbook
 
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
@@ -238,7 +241,8 @@ def q_scan_workbook(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(out_dir, "dims.xlsx"),
     )
     sheets = read_workbook(
-        spark, out_dir, {"region": schemas.REGION, "nation": schemas.NATION}
+        spark, out_dir, {"region": schemas.REGION, "nation": schemas.NATION},
+        "xlsx",
     )
     return sheets["nation"].join(
         sheets["region"],
@@ -259,11 +263,12 @@ def q_scan_ods(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's spreadsheet-family story (r11 verdict task #3; SURVEY.md
     §2.1 S19). Authors one .ods with `region` and `nation` sheets via the
     stdlib ODF writer, re-ingests both sheets distributed (binaryFile +
-    mapInPandas content.xml parse, sources/ods.py), and joins them —
+    mapInPandas content.xml parse, sources/grid.py), and joins them —
     proving each named sheet round-trips as an independent typed table
     through the ODF cell model (typed value attributes, text:p fallback,
     run-length repeats). Oracle: the same join on the original parquet."""
-    from cellbase_spark.sources.ods import read_ods_workbook, write_ods_workbook
+    from cellbase_spark.sources.grid import read_workbook
+    from cellbase_spark.sources.ods import write_ods_workbook
 
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
@@ -283,42 +288,14 @@ def q_scan_ods(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         os.path.join(out_dir, "dims.ods"),
     )
-    sheets = read_ods_workbook(
-        spark, out_dir, {"region": schemas.REGION, "nation": schemas.NATION}
+    sheets = read_workbook(
+        spark, out_dir, {"region": schemas.REGION, "nation": schemas.NATION},
+        "ods",
     )
     return sheets["nation"].join(
         sheets["region"],
         sheets["nation"]["n_regionkey"] == sheets["region"]["r_regionkey"],
     ).select("n_nationkey", "n_name", "r_name")
-
-
-@register(
-    "q_scan_xlsx_pyds",
-    family="scan",
-    oracle="SELECT * FROM nation",
-)
-def q_scan_xlsx_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 Python Data Source face of the xlsx capability (S4c):
-    the same nation round-trip as q_scan_excel, but ingested through a
-    REGISTERED DataSource — format('cellbase_xlsx') with explicit
-    partition planning (one InputPartition per workbook file) instead of
-    the binaryFile+mapInPandas composition. Proves the engine speaks the
-    modern pluggable-source API end-to-end: registration, schema
-    contract, partition planning, executor-side typed reads."""
-    from cellbase_spark.sources.excel import write_xlsx
-    from cellbase_spark.sources.pyds import register as register_pyds
-
-    n = load_table(spark, sf_dir, "nation")
-    out_dir = tempfile.mkdtemp(prefix="cellbase_spark_pyds_")
-    rows = [[r["n_nationkey"], r["n_name"], r["n_regionkey"]] for r in n.collect()]
-    write_xlsx(rows, os.path.join(out_dir, "nation.xlsx"),
-               header=["n_nationkey", "n_name", "n_regionkey"])
-    register_pyds(spark)
-    return (
-        spark.read.format("cellbase_xlsx")
-        .schema(schemas.NATION)
-        .load(out_dir)
-    )
 
 
 @register(
@@ -328,12 +305,11 @@ def q_scan_xlsx_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_roundtrip_xlsx_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full DISTRIBUTED xlsx round trip through the Spark 4 Python Data
-    Source (S4c write face): df.write.format('cellbase_xlsx') fans nation
-    out as one part-N.xlsx per partition (executor-side, no driver
-    collect), then the registered reader scans the directory back —
-    partition planning on the same files the sink just wrote. The whole
-    loop is the pluggable-source contract: writer, commit protocol,
-    reader, schema coercion."""
+    Source sink (S4d): df.write.format('cellbase_xlsx') fans nation out
+    as one part-N.xlsx per partition (executor-side, no driver collect),
+    then the one spreadsheet reader (sources/grid.read_sheet_table)
+    reads the files the sink just wrote, cast to the declared schema."""
+    from cellbase_spark.sources.grid import read_sheet_table
     from cellbase_spark.sources.pyds import register as register_pyds
 
     register_pyds(spark)
@@ -345,11 +321,7 @@ def q_roundtrip_xlsx_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append")
         .save(out_dir)
     )
-    return (
-        spark.read.format("cellbase_xlsx")
-        .schema(schemas.NATION)
-        .load(out_dir)
-    )
+    return read_sheet_table(spark, out_dir, schemas.NATION, "xlsx")
 
 
 @register(
@@ -359,12 +331,13 @@ def q_roundtrip_xlsx_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_roundtrip_ods_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full DISTRIBUTED .ods round trip through the Spark 4 Python Data
-    Source (round 12 — the OpenDocument face of S4c/S4d):
+    Source sink (the OpenDocument face of S4d):
     df.write.format('cellbase_ods') fans nation out as one part-N.ods per
-    partition (executor-side, no driver collect), then the registered
-    reader scans the directory back with explicit partition planning.
-    Same writer/commit/reader/coercion contract as the xlsx loop —
-    only the cell-grid codec differs (sources/ods.py)."""
+    partition (executor-side, no driver collect), then the one
+    spreadsheet reader scans the directory back. Same sink/commit/reader
+    contract as the xlsx loop — only the cell-grid codec differs
+    (sources/ods.py)."""
+    from cellbase_spark.sources.grid import read_sheet_table
     from cellbase_spark.sources.pyds import register as register_pyds
 
     register_pyds(spark)
@@ -376,11 +349,7 @@ def q_roundtrip_ods_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append")
         .save(out_dir)
     )
-    return (
-        spark.read.format("cellbase_ods")
-        .schema(schemas.NATION)
-        .load(out_dir)
-    )
+    return read_sheet_table(spark, out_dir, schemas.NATION, "ods")
 
 
 @register(
@@ -694,9 +663,11 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen2, os.path.join(out_dir, "gen2.ods"),
         header=["n_nationkey", "n_name", "n_regionkey"],
     )
-    from cellbase_spark.sources.ods import read_ods_table
+    from cellbase_spark.sources.grid import read_sheet_table
 
-    return read_ods_table(spark, out_dir, schemas.NATION, schema_mode="evolve")
+    return read_sheet_table(
+        spark, out_dir, schemas.NATION, "ods", schema_mode="evolve"
+    )
 
 
 @register(

@@ -1,4 +1,4 @@
-"""Excel (.xlsx) source — the reference's native spreadsheet format.
+"""Excel (.xlsx) codec — the reference's native spreadsheet format.
 
 The reference's whole workflow is 'author tables in spreadsheet software,
 load them as a database' (SURVEY.md §1); CSV is the interchange fallback
@@ -6,17 +6,8 @@ but .xlsx is the format users actually save. No Excel package ships in
 this environment, and none is needed: an .xlsx file is a zip of small XML
 parts, fully parseable with the Python stdlib (zipfile + ElementTree).
 
-Distributed design (the 100 TB-of-workbooks shape, not a driver loop):
-- `spark.read.format("binaryFile")` lists and reads the .xlsx files as
-  (path, bytes) rows, split across executors;
-- `mapInPandas` parses each workbook's XML on the executor that holds its
-  bytes, emitting header-mapped string cells;
-- the declared schema is applied by cast, mirroring the reference's
-  'cell strings coerced onto typed properties' load semantics and our
-  CSV path (io.read_csv_table).
-
-One workbook is one task's unit of work — parallelism comes from the
-number of files, which is how spreadsheet corpora actually arrive.
+The distributed scan over these grids is sources/grid.read_sheet_table
+(fmt='xlsx'); this module parses and writes single workbooks.
 """
 
 from __future__ import annotations
@@ -24,13 +15,7 @@ from __future__ import annotations
 import io as _io
 import re
 import zipfile
-from collections.abc import Iterator
 from xml.etree import ElementTree
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _R = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -135,89 +120,6 @@ def parse_xlsx_bytes(
         width = max(width, max(cells, default=-1) + 1)
         rows.append(cells)  # type: ignore[arg-type]
     return [[r.get(i) for i in range(width)] for r in rows]  # type: ignore[union-attr]
-
-
-def read_excel_table(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    sheet_index: int = 0,
-    header: bool = True,
-    sheet_name: str | None = None,
-    schema_mode: str = "strict",
-) -> DataFrame:
-    """Distributed .xlsx scan: binaryFile source -> per-executor stdlib
-    parse -> header-mapped cells cast to the declared schema. `sheet_name`
-    selects a named worksheet (workbook-order `sheet_index` otherwise).
-    `schema_mode` pins the generation-drift contract (sources/grid.py):
-    'strict' (default) demands header == declared columns, 'evolve'
-    null-fills missing declared columns and ignores extra sheet columns."""
-    from cellbase_spark.sources.grid import check_schema_mode, header_positions
-
-    check_schema_mode(schema_mode)
-    field_names = [f.name for f in schema.fields]
-    raw_schema = ", ".join(f"`{n}` string" for n in field_names)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[list[str | None]] = []
-            for content in pdf["content"]:
-                grid = parse_xlsx_bytes(bytes(content), sheet_index, sheet_name)
-                if not grid:
-                    continue
-                if header:
-                    head, body = grid[0], grid[1:]
-                    pos = header_positions(
-                        head, field_names, schema_mode,
-                        where=f"xlsx sheet {sheet_name or sheet_index}",
-                    )
-                else:
-                    body = grid
-                    pos = {name: i for i, name in enumerate(field_names)}
-                for row in body:
-                    out.append([
-                        row[pos[n]]
-                        if pos[n] is not None and pos[n] < len(row)
-                        else None
-                        for n in field_names
-                    ])
-            yield pd.DataFrame(out, columns=field_names, dtype=object)
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xlsx")
-        .load(path)
-        .select("content")
-        .mapInPandas(kernel, schema=raw_schema)
-    )
-    return raw.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
-def read_workbook(
-    spark: SparkSession,
-    path: str,
-    schemas: dict[str, StructType],
-    header: bool = True,
-    schema_mode: str = "strict",
-) -> dict[str, DataFrame]:
-    """The reference's core unit of work: a workbook of several named
-    sheets loaded as a database — one DataFrame per sheet name.
-
-    `schemas` maps sheet name -> declared schema (cellbase's model: every
-    sheet is a typed table; the declaration IS the contract, so no
-    inference pass). Each returned DataFrame is an independent lazy scan
-    of only its sheet — Spark reads the workbook bytes per sheet actually
-    used, and sheets never used are never parsed.
-    """
-    return {
-        name: read_excel_table(
-            spark, path, schema, header=header, sheet_name=name,
-            schema_mode=schema_mode,
-        )
-        for name, schema in schemas.items()
-    }
 
 
 def _sheet_xml(rows: list[list], header: list[str] | None) -> str:

@@ -1,4 +1,17 @@
-"""Shared header→schema mapping for the spreadsheet sources (xlsx/ods).
+"""The one distributed spreadsheet reader (xlsx and ods) and its shared
+header→schema contract.
+
+Scan topology, identical for both formats:
+- `spark.read.format("binaryFile")` lists and reads the `*.<fmt>` files as
+  (path, bytes) rows, split across executors;
+- `mapInPandas` parses each workbook on the executor that holds its bytes
+  with the format's stdlib codec (sources/excel.parse_xlsx_bytes or
+  sources/ods.parse_ods_bytes), emitting header-mapped string cells;
+- the declared schema is applied by cast (the reference's 'cell strings
+  coerced onto typed properties' load semantics, as io.read_csv_table).
+
+One workbook is one task's unit of work — parallelism comes from the
+number of files, which is how spreadsheet corpora actually arrive.
 
 Round 13 (r12 verdict #4): the schema-EVOLUTION contract for workbook
 re-ingest. Spreadsheet corpora evolve by generation — a sheet saved next
@@ -21,6 +34,19 @@ wrong contract for a data engine. The pinned contract:
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from cellbase_spark.sources.excel import parse_xlsx_bytes
+from cellbase_spark.sources.ods import parse_ods_bytes
+
+# fmt -> cell-grid codec; the key is also the file extension scanned
+_CODECS = {"xlsx": parse_xlsx_bytes, "ods": parse_ods_bytes}
 
 
 def check_schema_mode(schema_mode: str) -> None:
@@ -69,4 +95,86 @@ def header_positions(
         )
     return {
         n: (head.index(n) if n in head_names else None) for n in field_names
+    }
+
+
+def _codec(fmt: str):
+    if fmt not in _CODECS:
+        raise ValueError(
+            f"unsupported workbook format {fmt!r}; have {sorted(_CODECS)}"
+        )
+    return _CODECS[fmt]
+
+
+def read_sheet_table(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    fmt: str,
+    sheet_name: str | None = None,
+    schema_mode: str = "strict",
+) -> DataFrame:
+    """Distributed scan of one sheet (`sheet_name`, else the first) of
+    every `*.<fmt>` workbook at `path` (a file or a directory),
+    header-mapped and cast to the declared schema. `fmt` is 'xlsx' or
+    'ods'; `schema_mode` is the generation-drift contract in the module
+    docstring. No matching file raises instead of reading as an empty
+    table; the check is the scan's own driver-side file listing."""
+    parse = _codec(fmt)
+    check_schema_mode(schema_mode)
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", f"*.{fmt}")
+        .load(path)
+    )
+    if not files.inputFiles():
+        raise FileNotFoundError(f"no *.{fmt} workbook at {path}")
+    field_names = [f.name for f in schema.fields]
+    raw_schema = ", ".join(f"`{n}` string" for n in field_names)
+    sheet = sheet_name or "<first>"
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[list[str | None]] = []
+            for file, content in zip(pdf["path"], pdf["content"]):
+                grid = parse(bytes(content), sheet_name=sheet_name)
+                if not grid:
+                    continue
+                pos = header_positions(
+                    grid[0], field_names, schema_mode,
+                    where=f"{fmt} workbook {file} sheet {sheet}",
+                )
+                for row in grid[1:]:
+                    out.append([
+                        row[pos[n]]
+                        if pos[n] is not None and pos[n] < len(row)
+                        else None
+                        for n in field_names
+                    ])
+            yield pd.DataFrame(out, columns=field_names, dtype=object)
+
+    raw = files.select("path", "content").mapInPandas(kernel, schema=raw_schema)
+    return raw.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
+def read_workbook(
+    spark: SparkSession,
+    path: str,
+    schemas: dict[str, StructType],
+    fmt: str,
+    schema_mode: str = "strict",
+) -> dict[str, DataFrame]:
+    """The reference's core unit of work: a workbook of several named
+    sheets loaded as a database — one DataFrame per sheet name.
+
+    `schemas` maps sheet name -> declared schema (cellbase's model: every
+    sheet is a typed table; the declaration IS the contract, so no
+    inference pass). Each returned DataFrame is an independent lazy scan
+    of only its sheet — sheets never used are never parsed."""
+    _codec(fmt)  # a bad fmt fails even when no sheet is asked for
+    return {
+        name: read_sheet_table(spark, path, schema, fmt, name, schema_mode)
+        for name, schema in schemas.items()
     }

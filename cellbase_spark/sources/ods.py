@@ -1,4 +1,4 @@
-"""OpenDocument spreadsheet (.ods) source — the LibreOffice half of the
+"""OpenDocument spreadsheet (.ods) codec — the LibreOffice half of the
 reference's author-in-spreadsheet-software workflow.
 
 The reference's model is 'author tables in spreadsheet software, load
@@ -10,16 +10,9 @@ elements, plus a stored-uncompressed `mimetype` member and a
 META-INF/manifest.xml. All parseable with the Python stdlib
 (zipfile + ElementTree) — same machinery as sources/excel.py.
 
-Distributed design (identical to the xlsx source, deliberately):
-- `spark.read.format("binaryFile")` lists and reads the .ods files as
-  (path, bytes) rows, split across executors;
-- `mapInPandas` parses each document's content.xml on the executor that
-  holds its bytes, emitting header-mapped string cells;
-- the declared schema is applied by cast (the reference's 'cell strings
-  coerced onto typed properties' load semantics).
-
-One document is one task's unit of work — parallelism comes from the
-number of files, which is how spreadsheet corpora actually arrive.
+The distributed scan over these grids is sources/grid.read_sheet_table
+(fmt='ods'), the same reader as xlsx; this module parses and writes
+single documents.
 
 ODF specifics the parser must honor (vs the OOXML cell model):
 - cells carry `office:value-type`; typed values live in attributes
@@ -39,13 +32,7 @@ from __future__ import annotations
 
 import io as _io
 import zipfile
-from collections.abc import Iterator
 from xml.etree import ElementTree
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 _OFFICE = "{urn:oasis:names:tc:opendocument:xmlns:office:1.0}"
 _TABLE = "{urn:oasis:names:tc:opendocument:xmlns:table:1.0}"
@@ -231,86 +218,6 @@ def parse_ods_bytes(
             raise IndexError(f"ods has {len(tables)} sheets, wanted {sheet_index}")
         table = tables[sheet_index]
     return _parse_table(table)
-
-
-def read_ods_table(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    sheet_index: int = 0,
-    header: bool = True,
-    sheet_name: str | None = None,
-    schema_mode: str = "strict",
-) -> DataFrame:
-    """Distributed .ods scan: binaryFile source -> per-executor stdlib
-    parse -> header-mapped cells cast to the declared schema. `sheet_name`
-    selects a named sheet (document-order `sheet_index` otherwise).
-    `schema_mode` pins the generation-drift contract (sources/grid.py):
-    'strict' (default) demands header == declared columns, 'evolve'
-    null-fills missing declared columns and ignores extra sheet columns.
-
-    Mirror image of sources/excel.py::read_excel_table — the two formats
-    share the scan topology (one file = one task) and the coercion
-    contract; only the XML dialect differs."""
-    from cellbase_spark.sources.grid import check_schema_mode, header_positions
-
-    check_schema_mode(schema_mode)
-    field_names = [f.name for f in schema.fields]
-    raw_schema = ", ".join(f"`{n}` string" for n in field_names)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[list[str | None]] = []
-            for content in pdf["content"]:
-                grid = parse_ods_bytes(bytes(content), sheet_index, sheet_name)
-                if not grid:
-                    continue
-                if header:
-                    head, body = grid[0], grid[1:]
-                    pos = header_positions(
-                        head, field_names, schema_mode,
-                        where=f"ods sheet {sheet_name or sheet_index}",
-                    )
-                else:
-                    body = grid
-                    pos = {name: i for i, name in enumerate(field_names)}
-                for row in body:
-                    out.append([
-                        row[pos[n]]
-                        if pos[n] is not None and pos[n] < len(row)
-                        else None
-                        for n in field_names
-                    ])
-            yield pd.DataFrame(out, columns=field_names, dtype=object)
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.ods")
-        .load(path)
-        .select("content")
-        .mapInPandas(kernel, schema=raw_schema)
-    )
-    return raw.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
-def read_ods_workbook(
-    spark: SparkSession,
-    path: str,
-    schemas: dict[str, StructType],
-    header: bool = True,
-    schema_mode: str = "strict",
-) -> dict[str, DataFrame]:
-    """Several named sheets loaded as a database — one DataFrame per sheet
-    name, each an independent lazy scan of only its sheet."""
-    return {
-        name: read_ods_table(
-            spark, path, schema, header=header, sheet_name=name,
-            schema_mode=schema_mode,
-        )
-        for name, schema in schemas.items()
-    }
 
 
 def _esc(s: str) -> str:

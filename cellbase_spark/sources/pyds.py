@@ -1,23 +1,15 @@
-"""Spark 4 Python Data Source exposing the stdlib xlsx parser as a real
-``spark.read.format("cellbase_xlsx")`` source.
+"""Spark 4 Python Data Sources: the distributed spreadsheet SINKS
+``df.write.format("cellbase_xlsx")`` / ``format("cellbase_ods")`` and the
+``format("cellbase_replay")`` streaming source.
 
-Where sources/excel.py wires workbook parsing through binaryFile +
-mapInPandas (the Spark-3-era pattern), this is the Spark-4-native face of
-the same capability: a registered DataSource with explicit partition
-planning — ONE InputPartition per workbook file, so a directory of 10k
-workbooks fans out as 10k independently-scheduled scan tasks with no
-driver-side parsing. Cell grids come from sources/excel.parse_xlsx_bytes
-(shared strings, inline strings, booleans, numerics); values are coerced
-executor-side to the user-declared schema (the reference's model: the
-declaration IS the contract — no inference pass).
+The sinks write one part-N.<fmt> workbook per partition, executor-side,
+through the stdlib writers in sources/excel.py and sources/ods.py. Read
+the files back with sources/grid.read_sheet_table (fmt='xlsx'|'ods'),
+the engine's one spreadsheet reader.
 
 Usage:
     spark.dataSource.register(XlsxDataSource)
-    df = (spark.read.format("cellbase_xlsx")
-          .schema("n_nationkey bigint, n_name string, n_regionkey bigint")
-          .option("sheet", "nation")      # optional; first sheet otherwise
-          .option("header", "true")       # default true
-          .load("/path/to/dir-or-file.xlsx"))
+    df.write.format("cellbase_xlsx").mode("overwrite").save("/path/to/dir")
 """
 
 from __future__ import annotations
@@ -28,50 +20,12 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
-
-
-def _coerce(value: str | None, spark_type: str):
-    """Cell string -> declared type. Numeric cells surface as '3' or
-    '3.5'; int() via float() accepts both spellings. Empty cell == NULL
-    (the spreadsheet model: a cell holding '' is simply not written, so
-    '' and absent are indistinguishable by design — callers needing the
-    distinction must encode it)."""
-    if value is None or value == "":
-        return None
-    if spark_type in ("bigint", "int", "smallint", "tinyint", "long"):
-        return int(float(value))
-    if spark_type in ("double", "float"):
-        return float(value)
-    if spark_type == "boolean":
-        return value.strip().lower() in ("1", "true")
-    if spark_type.startswith("timestamp"):
-        import datetime
-
-        return datetime.datetime.fromisoformat(value)
-    if spark_type == "date":
-        import datetime
-
-        return datetime.date.fromisoformat(value)
-    return value
-
-
-def _parse_sheet(fmt: str, data: bytes, sheet_name: str | None):
-    """Format dispatch, resolved executor-side (keeps the reader object
-    picklable without dragging parser modules into the closure)."""
-    if fmt == "ods":
-        from cellbase_spark.sources.ods import parse_ods_bytes
-
-        return parse_ods_bytes(data, sheet_name=sheet_name)
-    from cellbase_spark.sources.excel import parse_xlsx_bytes
-
-    return parse_xlsx_bytes(data, sheet_name=sheet_name)
 
 
 def _write_sheet(fmt: str, rows: list[list], path: str, header: list[str]) -> None:
@@ -86,7 +40,7 @@ def _write_sheet(fmt: str, rows: list[list], path: str, header: list[str]) -> No
 
 
 class XlsxDataSource(DataSource):
-    """format("cellbase_xlsx"): distributed typed scan of .xlsx files."""
+    """format("cellbase_xlsx"): distributed .xlsx sink (write-only)."""
 
     FMT = "xlsx"
 
@@ -94,98 +48,16 @@ class XlsxDataSource(DataSource):
     def name(cls) -> str:
         return f"cellbase_{cls.FMT}"
 
-    def schema(self) -> StructType | str:
-        # The declared schema is the contract (no inference): Spark calls
-        # this only when the user didn't pass .schema(...).
-        raise ValueError(
-            f"cellbase_{self.FMT} requires an explicit .schema(...): sheets are "
-            "typed tables, the declaration is the contract (no inference)"
-        )
-
-    def reader(self, schema: StructType) -> "SheetReader":
-        return SheetReader(schema, self.options, self.FMT)
-
     def writer(self, schema: StructType, overwrite: bool) -> "SheetWriter":
         return SheetWriter(schema, self.options, overwrite, self.FMT)
 
 
 class OdsDataSource(XlsxDataSource):
-    """format("cellbase_ods"): the OpenDocument face of the same
-    pluggable-source capability (round 12) — identical partition
-    planning, typed coercion and sink/commit protocol; only the cell
-    grid codec differs (sources/ods.py vs sources/excel.py)."""
+    """format("cellbase_ods"): the OpenDocument face of the same sink —
+    identical sink/commit protocol; only the cell grid codec differs
+    (sources/ods.py vs sources/excel.py)."""
 
     FMT = "ods"
-
-
-class SheetReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict, fmt: str = "xlsx"):
-        self._schema = schema
-        self._fmt = fmt
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError(f"cellbase_{fmt} needs .load(<file-or-dir>)")
-        self._sheet = options.get("sheet")  # None -> first sheet
-        self._header = str(options.get("header", "true")).lower() == "true"
-        # generation-drift contract shared with the mapInPandas readers
-        # (sources/grid.py): strict (default) or evolve. Validated
-        # eagerly — a typo'd option fails at plan time, not in a task.
-        self._schema_mode = str(options.get("schema_mode", "strict"))
-        from cellbase_spark.sources.grid import check_schema_mode
-
-        check_schema_mode(self._schema_mode)
-
-    def partitions(self) -> Sequence[InputPartition]:
-        # One partition per workbook FILE: the unit a single task can
-        # parse independently. Planned driver-side from a listing only —
-        # no bytes are read until executors run read().
-        if os.path.isdir(self._path):
-            files = sorted(glob.glob(os.path.join(self._path, f"*.{self._fmt}")))
-        else:
-            files = [self._path]
-        if not files:
-            raise FileNotFoundError(f"no .{self._fmt} under {self._path}")
-        return [InputPartition(f) for f in files]
-
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        # Executor-side: parse one workbook, map header names to the
-        # declared fields, coerce cell strings to the declared types.
-        with open(partition.value, "rb") as f:
-            grid = _parse_sheet(self._fmt, f.read(), self._sheet)
-        if not grid:
-            return
-        fields = [(f.name, f.dataType.simpleString()) for f in self._schema.fields]
-        if self._header:
-            from cellbase_spark.sources.grid import header_positions
-
-            head, body = grid[0], grid[1:]
-            pos = header_positions(
-                head,
-                [name for name, _ in fields],
-                self._schema_mode,
-                where=(
-                    f"cellbase_{self._fmt} workbook {partition.value!r} "
-                    f"(sheet={self._sheet or '<first>'}); header missing "
-                    "declared column(s) or carrying undeclared ones"
-                ),
-            )
-        else:
-            body = grid
-            pos = {name: i for i, (name, _) in enumerate(fields)}
-        for row in body:
-            yield tuple(
-                _coerce(
-                    row[pos[name]]
-                    if pos[name] is not None and pos[name] < len(row)
-                    else None,
-                    t,
-                )
-                for name, t in fields
-            )
-
-
-# Back-compat alias (pre-round-12 name).
-XlsxReader = SheetReader
 
 
 class XlsxCommitMessage(WriterCommitMessage):
@@ -251,10 +123,6 @@ class SheetWriter(DataSourceWriter):
 
     def abort(self, messages) -> None:
         pass
-
-
-# Back-compat alias (pre-round-12 name).
-XlsxWriter = SheetWriter
 
 
 class ReplayDataSource(DataSource):

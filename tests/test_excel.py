@@ -1,10 +1,10 @@
-"""Stdlib .xlsx source (sources/excel.py): writer/parser round-trips and
-the distributed binaryFile + mapInPandas scan path."""
+"""Stdlib .xlsx codec (sources/excel.py): writer/parser round-trips,
+multi-sheet workbooks through the one reader (sources/grid.py), and the
+distributed format("cellbase_xlsx") sink."""
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -15,11 +15,10 @@ from pyspark.sql.types import (
 from cellbase_spark.sources.excel import (
     list_sheets,
     parse_xlsx_bytes,
-    read_excel_table,
-    read_workbook,
     write_xlsx,
     write_xlsx_workbook,
 )
+from cellbase_spark.sources.grid import read_sheet_table, read_workbook
 
 
 def test_parse_roundtrip_types(tmp_path):
@@ -34,24 +33,6 @@ def test_parse_roundtrip_types(tmp_path):
     assert grid[1] == ["1", "alpha & <beta>", "1.5", "true"]
     assert grid[2][2] == "-3.25" and grid[2][3] == "false"
     assert grid[3][1] is None  # gap cell stays a gap
-
-
-def test_distributed_scan_applies_schema(spark, tmp_path):
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField("score", DoubleType()),
-            StructField("flag", BooleanType()),
-        ]
-    )
-    # two workbooks in the directory -> two parse tasks, one union'd table
-    write_xlsx([[1, "a", 1.5, True]], str(tmp_path / "a.xlsx"), header=["id", "name", "score", "flag"])
-    write_xlsx([[2, "b", 2.5, False]], str(tmp_path / "b.xlsx"), header=["id", "name", "score", "flag"])
-    df = read_excel_table(spark, str(tmp_path), schema).orderBy("id")
-    assert [f.dataType for f in df.schema.fields] == [t for t in (LongType(), StringType(), DoubleType(), BooleanType())]
-    rows = df.collect()
-    assert [tuple(r) for r in rows] == [(1, "a", 1.5, True), (2, "b", 2.5, False)]
 
 
 def test_multisheet_workbook_roundtrip(spark, tmp_path):
@@ -81,6 +62,7 @@ def test_multisheet_workbook_roundtrip(spark, tmp_path):
                 [StructField("id", LongType()), StructField("score", DoubleType())]
             ),
         },
+        "xlsx",
     )
     people = sorted(tuple(r) for r in tables["people"].collect())
     scores = sorted(tuple(r) for r in tables["scores"].collect())
@@ -88,14 +70,6 @@ def test_multisheet_workbook_roundtrip(spark, tmp_path):
     assert scores == [(1, 9.5), (2, 7.25)]
     joined = tables["people"].join(tables["scores"], "id").orderBy("id").collect()
     assert [(r.id, r.name, r.score) for r in joined] == [(1, "ada", 9.5), (2, "bob", 7.25)]
-
-
-def test_header_reorder_is_respected(spark, tmp_path):
-    # columns in the sheet in a different order than the declared schema
-    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
-    write_xlsx([["x", 7], ["y", 8]], str(tmp_path / "c.xlsx"), header=["name", "id"])
-    rows = read_excel_table(spark, str(tmp_path), schema).orderBy("id").collect()
-    assert [tuple(r) for r in rows] == [(7, "x"), (8, "y")]
 
 
 def test_fallback_sheet_order_numeric(tmp_path):
@@ -120,35 +94,9 @@ def test_fallback_sheet_order_numeric(tmp_path):
     ]
 
 
-def test_python_datasource_xlsx(spark, tmp_path):
-    """Spark 4 Python Data Source face: registered format('cellbase_xlsx')
-    plans one partition per file and coerces to the declared schema."""
-    from pyspark.sql.types import LongType, StructField, StructType, StringType
-
-    from cellbase_spark.sources.excel import write_xlsx
-    from cellbase_spark.sources.pyds import register
-
-    schema = StructType(
-        [
-            StructField("k", LongType()),
-            StructField("name", StringType()),
-            StructField("x", LongType()),
-        ]
-    )
-    write_xlsx([[1, "a", 10], [2, "b", 20]], str(tmp_path / "one.xlsx"),
-               header=["k", "name", "x"])
-    write_xlsx([[3, "c", 30]], str(tmp_path / "two.xlsx"),
-               header=["k", "name", "x"])
-    register(spark)
-    df = spark.read.format("cellbase_xlsx").schema(schema).load(str(tmp_path))
-    assert df.rdd.getNumPartitions() == 2  # one partition per workbook
-    rows = {(r["k"], r["name"], r["x"]) for r in df.collect()}
-    assert rows == {(1, "a", 10), (2, "b", 20), (3, "c", 30)}
-
-
 def test_python_datasource_xlsx_distributed_write(spark, tmp_path):
-    """Writer face: each partition writes its own part-N.xlsx; reading
-    the directory back restores all rows."""
+    """Distributed sink: each partition writes its own part-N.xlsx;
+    reading the directory back restores all rows."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from cellbase_spark.sources.pyds import register
@@ -164,7 +112,7 @@ def test_python_datasource_xlsx_distributed_write(spark, tmp_path):
 
     files = glob.glob(out + "/part-*.xlsx")
     assert len(files) >= 2  # genuinely distributed: multiple part files
-    back = spark.read.format("cellbase_xlsx").schema(schema).load(out)
+    back = read_sheet_table(spark, out, schema, "xlsx")
     assert {(r["k"], r["name"]) for r in back.collect()} == {
         (i, f"r{i}") for i in range(10)
     }
@@ -192,70 +140,7 @@ def test_python_datasource_xlsx_overwrite_drops_stale_parts(spark, tmp_path):
     new = spark.createDataFrame([(100, "new0"), (101, "new1")], schema)
     new.repartition(1).write.format("cellbase_xlsx").mode("overwrite").save(out)
     assert len(glob.glob(out + "/part-*.xlsx")) == 1
-    back = spark.read.format("cellbase_xlsx").schema(schema).load(out)
+    back = read_sheet_table(spark, out, schema, "xlsx")
     assert {(r["k"], r["name"]) for r in back.collect()} == {
         (100, "new0"), (101, "new1")
     }
-
-
-def test_python_datasource_xlsx_missing_column_error(spark, tmp_path):
-    """A workbook whose header lacks a declared column fails with an error
-    naming the file and the missing field (ADVICE r3: was a bare
-    ValueError from list.index)."""
-    import pytest
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-    from pyspark.errors import PythonException
-
-    from cellbase_spark.sources.excel import write_xlsx
-    from cellbase_spark.sources.pyds import register
-
-    register(spark)
-    write_xlsx([[1, "a"]], str(tmp_path / "one.xlsx"), header=["k", "name"])
-    schema = StructType(
-        [StructField("k", LongType()), StructField("nope", StringType())]
-    )
-    df = spark.read.format("cellbase_xlsx").schema(schema).load(str(tmp_path))
-    with pytest.raises(PythonException, match="missing from the sheet.*nope"):
-        df.collect()
-
-    # evolve opt-in: the declared-but-absent column null-fills instead
-    got = (
-        spark.read.format("cellbase_xlsx")
-        .schema(schema)
-        .option("schema_mode", "evolve")
-        .load(str(tmp_path))
-        .collect()
-    )
-    assert [(r.k, r.nope) for r in got] == [(1, None)]
-    # typo'd mode fails at plan time, driver-side
-    with pytest.raises(Exception, match="schema_mode"):
-        spark.read.format("cellbase_xlsx").schema(schema).option(
-            "schema_mode", "merge"
-        ).load(str(tmp_path)).collect()
-
-
-def test_schema_mode_contract_xlsx(spark, tmp_path):
-    """The xlsx source pins the same generation-drift contract as ods
-    (sources/grid.py): strict raises naming the columns, evolve
-    null-fills / projects."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from cellbase_spark.sources.excel import read_excel_table, write_xlsx
-
-    gen1 = tmp_path / "gen1"
-    gen1.mkdir()
-    write_xlsx([[1, "a"]], str(gen1 / "t.xlsx"), header=["k", "v"])
-
-    wide = StructType([
-        StructField("k", IntegerType()),
-        StructField("v", StringType()),
-        StructField("x", IntegerType()),
-    ])
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="missing from the sheet.*'x'"):
-        read_excel_table(spark, str(gen1), wide).collect()
-    got = read_excel_table(
-        spark, str(gen1), wide, schema_mode="evolve"
-    ).collect()
-    assert [(r.k, r.v, r.x) for r in got] == [(1, "a", None)]

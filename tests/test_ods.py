@@ -1,7 +1,7 @@
-"""Stdlib .ods source (sources/ods.py): ODF writer/parser round-trips,
+"""Stdlib .ods codec (sources/ods.py): ODF writer/parser round-trips,
 the ODF cell model (typed attributes, text:p fallback, run-length
-repeats, covered cells), and the distributed binaryFile + mapInPandas
-scan path."""
+repeats, covered cells), .ods workbooks through the one reader
+(sources/grid.py), and the distributed format("cellbase_ods") sink."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import zipfile
 
 import pytest
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -17,11 +16,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cellbase_spark.sources.grid import read_sheet_table, read_workbook
 from cellbase_spark.sources.ods import (
     list_sheets,
     parse_ods_bytes,
-    read_ods_table,
-    read_ods_workbook,
     write_ods,
     write_ods_workbook,
 )
@@ -194,25 +192,6 @@ def test_multisheet_and_sheet_selection(tmp_path):
         parse_ods_bytes(data, sheet_index=2)
 
 
-def test_distributed_scan_applies_schema(spark, tmp_path):
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField("score", DoubleType()),
-            StructField("flag", BooleanType()),
-        ]
-    )
-    # two documents in the directory -> two parse tasks, one union'd table
-    write_ods([[1, "a", 1.5, True]], str(tmp_path / "a.ods"), header=["id", "name", "score", "flag"])
-    write_ods([[2, "b", 2.5, False]], str(tmp_path / "b.ods"), header=["id", "name", "score", "flag"])
-    df = read_ods_table(spark, str(tmp_path), schema).orderBy("id")
-    assert [f.dataType for f in df.schema.fields] == [
-        LongType(), StringType(), DoubleType(), BooleanType()
-    ]
-    assert [tuple(r) for r in df.collect()] == [(1, "a", 1.5, True), (2, "b", 2.5, False)]
-
-
 def test_workbook_join_roundtrip(spark, tmp_path):
     path = str(tmp_path / "db.ods")
     write_ods_workbook(
@@ -222,7 +201,7 @@ def test_workbook_join_roundtrip(spark, tmp_path):
         },
         path,
     )
-    tables = read_ods_workbook(
+    tables = read_workbook(
         spark,
         str(tmp_path),
         {
@@ -233,22 +212,16 @@ def test_workbook_join_roundtrip(spark, tmp_path):
                 [StructField("id", LongType()), StructField("score", DoubleType())]
             ),
         },
+        "ods",
     )
     joined = tables["people"].join(tables["scores"], "id").orderBy("id").collect()
     assert [(r.id, r.name, r.score) for r in joined] == [(1, "ada", 9.5), (2, "bob", 7.25)]
 
 
-def test_header_reorder_is_respected(spark, tmp_path):
-    schema = StructType([StructField("id", LongType()), StructField("name", StringType())])
-    write_ods([["x", 7], ["y", 8]], str(tmp_path / "c.ods"), header=["name", "id"])
-    rows = read_ods_table(spark, str(tmp_path), schema).orderBy("id").collect()
-    assert [tuple(r) for r in rows] == [(7, "x"), (8, "y")]
-
-
 def test_python_datasource_ods_roundtrip(spark, tmp_path):
     """Registered format('cellbase_ods'): distributed sink (one part-N.ods
-    per partition) then partition-planned typed read-back; overwrite drops
-    stale parts like the xlsx face."""
+    per partition) then a typed read-back through the one reader;
+    overwrite drops stale parts like the xlsx face."""
     import os
 
     from pyspark.sql.types import LongType
@@ -272,14 +245,14 @@ def test_python_datasource_ods_roundtrip(spark, tmp_path):
             StructField("score", DoubleType()),
         ]
     )
-    back = spark.read.format("cellbase_ods").schema(schema).load(out)
+    back = read_sheet_table(spark, out, schema, "ods")
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
     # overwrite with fewer partitions drops the stale third part
     df.limit(2).repartition(1).write.format("cellbase_ods").mode(
         "overwrite"
     ).save(out)
     assert len([f for f in os.listdir(out) if f.endswith(".ods")]) == 1
-    assert spark.read.format("cellbase_ods").schema(schema).load(out).count() == 2
+    assert read_sheet_table(spark, out, schema, "ods").count() == 2
 
 
 def test_hostile_inputs_fail_loudly_and_typed(tmp_path):
@@ -403,57 +376,6 @@ def test_encrypted_and_exotic_zip_members_fail_typed(tmp_path):
         parse_ods_bytes(bytes(weird))
 
 
-def test_schema_mode_contract(spark, tmp_path):
-    """Generation drift is LOUD by default and serveable by opt-in
-    (sources/grid.py, r12 verdict #4): strict raises a typed error
-    naming the drifted columns; evolve null-fills missing declared
-    columns and ignores extra sheet columns."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from cellbase_spark.sources.ods import read_ods_table
-
-    gen1 = tmp_path / "gen1"
-    gen2 = tmp_path / "gen2"
-    both = tmp_path / "both"
-    for d in (gen1, gen2, both):
-        d.mkdir()
-    write_ods([[1, "a"], [2, "b"]], str(gen1 / "t.ods"), header=["k", "v"])
-    write_ods([[3, "c", 30]], str(gen2 / "t.ods"), header=["k", "v", "x"])
-    # flat dir holding both generations (binaryFile does not recurse)
-    write_ods([[1, "a"], [2, "b"]], str(both / "g1.ods"), header=["k", "v"])
-    write_ods([[3, "c", 30]], str(both / "g2.ods"), header=["k", "v", "x"])
-
-    wide = StructType([
-        StructField("k", IntegerType()),
-        StructField("v", StringType()),
-        StructField("x", IntegerType()),
-    ])
-    narrow = StructType(wide.fields[:2])
-
-    # strict (default): both drift directions raise, naming the columns
-    with pytest.raises(Exception, match="missing from the sheet.*'x'"):
-        read_ods_table(spark, str(gen1), wide).collect()
-    with pytest.raises(Exception, match="not in the declared schema.*'x'"):
-        read_ods_table(spark, str(gen2), narrow).collect()
-
-    # evolve: old generation null-fills the new column...
-    got = read_ods_table(
-        spark, str(both), wide, schema_mode="evolve"
-    ).orderBy("k").collect()
-    assert [(r.k, r.v, r.x) for r in got] == [
-        (1, "a", None), (2, "b", None), (3, "c", 30)
-    ]
-    # ...and the old schema reads the declared projection of new files
-    got2 = read_ods_table(
-        spark, str(gen2), narrow, schema_mode="evolve"
-    ).collect()
-    assert [(r.k, r.v) for r in got2] == [(3, "c")]
-
-    # unknown mode is itself loud
-    with pytest.raises(ValueError, match="schema_mode"):
-        read_ods_table(spark, str(gen1), narrow, schema_mode="merge").collect()
-
-
 def test_duplicate_declared_header_is_ambiguous_in_strict(spark, tmp_path):
     """A declared column appearing twice in a sheet header is a drift
     shape strict must refuse (silent first-wins was the old behavior);
@@ -467,6 +389,8 @@ def test_duplicate_declared_header_is_ambiguous_in_strict(spark, tmp_path):
         [StructField("k", IntegerType()), StructField("v", StringType())]
     )
     with pytest.raises(Exception, match="duplicated in the sheet header.*'k'"):
-        read_ods_table(spark, str(d), schema).collect()
-    got = read_ods_table(spark, str(d), schema, schema_mode="evolve").collect()
+        read_sheet_table(spark, str(d), schema, "ods").collect()
+    got = read_sheet_table(
+        spark, str(d), schema, "ods", schema_mode="evolve"
+    ).collect()
     assert [(r.k, r.v) for r in got] == [(1, "a")]

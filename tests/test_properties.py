@@ -268,7 +268,7 @@ def test_bmp_codec_roundtrip_property():
             st.integers(min_value=-(2**40), max_value=2**40),
             # min_size=1: an empty cell IS null in the spreadsheet model
             # ('' is never materialized in xlsx), so '' would read back
-            # as None by design — see sources/pyds._coerce.
+            # as None by design (an empty cell is a gap in both codecs).
             st.text(
                 alphabet=st.characters(
                     whitelist_categories=("Lu", "Ll", "Nd"), max_codepoint=0x7E
@@ -288,9 +288,9 @@ def test_bmp_codec_roundtrip_property():
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 def test_pyds_xlsx_roundtrip_typed(spark, tmp_path_factory, rows):
     """Property: any (long, string, double) table survives the Python
-    Data Source write -> read loop bit-exactly in BOTH spreadsheet
+    Data Source sink -> one-reader loop bit-exactly in BOTH spreadsheet
     dialects (numeric cells serialize with repr-roundtrip precision;
-    strings via sharedStrings / escaped text:p)."""
+    strings via inline strings / escaped text:p)."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -299,6 +299,7 @@ def test_pyds_xlsx_roundtrip_typed(spark, tmp_path_factory, rows):
         StructType,
     )
 
+    from cellbase_spark.sources.grid import read_sheet_table
     from cellbase_spark.sources.pyds import register
 
     register(spark)
@@ -311,11 +312,11 @@ def test_pyds_xlsx_roundtrip_typed(spark, tmp_path_factory, rows):
     )
     df = spark.createDataFrame(rows, schema)
     # both spreadsheet dialects share the coercion contract: the same
-    # table must survive the xlsx AND ods DataSource loops bit-exactly
+    # table must survive the xlsx AND ods loops bit-exactly
     for fmt in ("xlsx", "ods"):
         out = str(tmp_path_factory.mktemp(f"pyds_prop_{fmt}"))
         df.write.format(f"cellbase_{fmt}").mode("append").save(out)
-        back = spark.read.format(f"cellbase_{fmt}").schema(schema).load(out)
+        back = read_sheet_table(spark, out, schema, fmt)
         got = sorted((r["k"], r["s"], r["x"]) for r in back.collect())
         assert got == sorted(rows), fmt
 
