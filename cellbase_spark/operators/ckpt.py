@@ -1,4 +1,5 @@
-"""Eager localCheckpoint with deterministic block release.
+"""Eager localCheckpoint, and one owner for the blocks a registry build
+pins.
 
 Why this exists: ``df.localCheckpoint(eager=True)`` truncates lineage and
 caches the partitions — but the cached blocks are the ONLY copy, so Spark
@@ -8,49 +9,46 @@ entries). Repeated calls to a checkpoint-using query therefore ACCUMULATE
 non-evictable blocks until the JVM GC-locks: measured at sf10,
 back-to-back ``q_pagerank`` calls crashed the second run, and at sf1
 back-to-back ``q_dedup_clusters`` calls degraded 83 s -> 121 s with
-GCLocker thrash (BASELINE.md round-5 notes).
+GCLocker thrash (BASELINE.md round-5 notes). Spark's ContextCleaner does
+not help: it did not free ``localCheckpoint`` blocks after every Python
+reference was dropped and ``System.gc()`` ran, so the release has to be
+explicit.
 
-``eager_checkpoint`` keeps the exact localCheckpoint semantics (same
-plans, same lineage truncation — the plan-pin suite is unaffected) but
-records the underlying JVM RDD handle; ``release_prior`` frees every
-recorded handle from PREVIOUS query builds. The registry calls
-``release_prior`` at the start of each query build: by then the previous
-query's result has been consumed (the driver, bench, and the oracle gate
-are all strictly sequential), so its checkpoint blocks are dead weight.
+Owner rule: every registry build (``registry_build``, entered by
+``registry.wrapped``) gets a ``Build`` record. ``eager_checkpoint``
+records the checkpoint's JVM RDD and ``persist`` the persisted frame's
+JVM Dataset into the current record; the wrapper hands the record the
+frame the build returned, kept only as a weak reference. At the start
+of each later registry build, a record is released (every handle
+``unpersist(False)``, best-effort) once its build has returned AND its
+result's weak reference is dead. A build that raises releases its
+record on exit; a running build, or one whose result is still
+reachable, is never released. So "build A, build B, collect A" and
+registry builds on concurrent threads keep their blocks, while
+sequential build-and-consume loops still free each build's blocks at
+the next build. Release waits for the next build instead of running in
+a finalizer on the result: the result's weak reference dies while
+``result.orderBy(...)`` is still alive.
 
-Scoping contract (round-6 fix): handles are recorded ONLY for builds that
-enter through the registry wrapper (``registry_build`` context manager,
-entered by ``registry.wrapped``). Checkpoints created by the public
-CellTable API (e.g. ``dedup_clusters`` -> connected_components) are NOT
-recorded, so a later registered-query build can never free blocks backing
-a still-unconsumed API-returned DataFrame. API-created checkpoint blocks
-follow stock localCheckpoint lifetime (live until session stop), which is
-the behavior an interactive user of localCheckpoint already expects.
+Contract: a frame DERIVED from a registry result must be consumed
+before the next registry build if the result itself has been dropped.
 
-Caveat (documented contract, registry surface only): a caller that builds
-registered query A, then builds registered query B, and only then collects
-A would recompute-fail on A's truncated lineage. No engine surface does
-this — results are collected before the next build everywhere (driver
-contract, bench.py, check_oracle, driver_sim, tests).
+Checkpoints and persisted frames created outside a registry build (the
+public CellTable API, e.g. ``dedup_clusters`` -> connected_components)
+are NOT recorded: they follow stock localCheckpoint/persist lifetime,
+so no registry build can free blocks backing an API-returned frame.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from contextlib import contextmanager
 from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
-# JVM RDD handles of checkpoints created by registry-wrapped query builds.
-# release_prior() runs at the START of the next wrapped build, so the list
-# only ever holds handles from already-consumed builds when it is drained.
-# NOTE (single-threaded assumption): the record/drain cycle assumes query
-# builds are strictly sequential (driver contract, bench, check_oracle).
-# The in-build FLAG below is context-local (r6 ADVICE), so an API-surface
-# eager_checkpoint on a concurrent thread is never recorded — but two
-# registry builds racing on different threads would still drain each
-# other's handles; don't do that.
-_LIVE: list = []
 
 # (application id, rdd id) -> stable key of the plan the checkpoint
 # replaced. Lets a statistics cache recognise "the same logical input,
@@ -108,30 +106,85 @@ def stable_plan_key(df: DataFrame):
             resolved.append(RDD_SOURCE_HASH.get((app, rid), ("rdd", app, rid)))
     return (hashlib.sha1(txt.encode()).hexdigest(), tuple(resolved))
 
-# True only while a registry-wrapped query build is executing in THIS
-# thread/context; set via registry_build(). eager_checkpoint records
-# handles only in that scope. ContextVar (not a module global) so a
-# concurrent API-created checkpoint on another thread is not captured
-# and later freed by an unrelated registry build.
-_IN_REGISTRY_BUILD: ContextVar[bool] = ContextVar(
-    "cellbase_ckpt_in_registry_build", default=False
-)
+
+class Build:
+    """What one registry build pinned: JVM handles (checkpoint RDDs and
+    persisted Datasets, both freed by ``unpersist(False)``) and a weak
+    reference to the frame the build returned (None while it runs)."""
+
+    __slots__ = ("handles", "result")
+
+    def __init__(self) -> None:
+        self.handles: list = []
+        self.result = None
+
+    def returned(self, df: DataFrame) -> DataFrame:
+        self.result = weakref.ref(df)
+        return df
+
+    def _release(self) -> None:
+        for h in self.handles:
+            try:
+                h.unpersist(False)
+            except Exception:  # pragma: no cover - session already stopped
+                pass
+        self.handles.clear()
+
+
+# Records of registry builds not yet released, guarded by _BUILDS_LOCK.
+# The current build is context-local, so a checkpoint made on another
+# thread (API surface or a concurrent build) lands in its own record.
+_BUILDS: list[Build] = []
+_BUILDS_LOCK = threading.Lock()
+_CURRENT: ContextVar[Build | None] = ContextVar("cellbase_ckpt_build", default=None)
 
 
 @contextmanager
 def registry_build():
-    """Mark the dynamic extent of a registry-wrapped query build."""
-    token = _IN_REGISTRY_BUILD.set(True)
+    """Scope one registry build: release the records of earlier builds
+    whose results are gone, then yield this build's record. The caller
+    passes the build's result to ``Build.returned``."""
+    build = Build()
+    with _BUILDS_LOCK:
+        gone = [b for b in _BUILDS if b.result is not None and b.result() is None]
+        for b in gone:
+            _BUILDS.remove(b)
+        _BUILDS.append(build)
+    for b in gone:
+        b._release()
+    token = _CURRENT.set(build)
     try:
-        yield
+        yield build
+    except BaseException:
+        with _BUILDS_LOCK:
+            _BUILDS.remove(build)
+        build._release()
+        raise
     finally:
-        _IN_REGISTRY_BUILD.reset(token)
+        _CURRENT.reset(token)
+
+
+def pinned() -> int:
+    """Checkpoint handles plus persisted frames held by unreleased
+    registry builds."""
+    with _BUILDS_LOCK:
+        return sum(len(b.handles) for b in _BUILDS)
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist(MEMORY_AND_DISK)`` — evictable, lineage kept — and,
+    inside a registry build, recorded so the build's record releases it."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    build = _CURRENT.get()
+    if build is not None:
+        build.handles.append(out._jdf)
+    return out
 
 
 def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager=eager)``; record the block handle when
-    inside a registry build (API-created checkpoints are never recorded —
-    see module docstring).
+    """``df.localCheckpoint(eager=eager)``; record the block handle in the
+    current registry build's record (API-created checkpoints are never
+    recorded — see module docstring).
 
     ``eager=False`` defers materialization to the caller's FIRST action
     on the returned frame — lineage truncation, block recording and the
@@ -166,22 +219,10 @@ def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
             RDD_SOURCE_HASH[(_app_id(out), int(rid))] = src_key
         except Exception:  # pragma: no cover - py4j accessor drift
             pass
-    if _IN_REGISTRY_BUILD.get():
+    build = _CURRENT.get()
+    if build is not None:
         try:  # best-effort: failing to record must never fail the query
-            _LIVE.append(out._jdf.queryExecution().analyzed().rdd())
+            build.handles.append(out._jdf.queryExecution().analyzed().rdd())
         except Exception:  # pragma: no cover - py4j accessor drift
             pass
     return out
-
-
-def release_prior() -> int:
-    """Free all recorded checkpoint blocks; returns how many were freed."""
-    n = 0
-    while _LIVE:
-        rdd = _LIVE.pop()
-        try:
-            rdd.unpersist(False)
-            n += 1
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    return n

@@ -26,11 +26,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-# Diagnostics from the most recent connected_components call in this
-# process: {"edges": int, "path": "driver"|"iterative", "rounds": int}.
-# Read by scripts/bench_trend-style measurements; not part of the result.
-LAST_CC_STATS: dict = {}
-
 MOD = 1_000_000_007
 
 # -- hashing expression builders (Spark side) --------------------------------
@@ -567,7 +562,6 @@ def connected_components(
     replay rounds 1..N-1, and the (possibly expensive) edge pipeline is
     materialized once up front.
     """
-    global LAST_CC_STATS
     e = edges.select(F.col(src_col).alias("_u"), F.col(dst_col).alias("_v")).transform(
         _ckpt
     )
@@ -582,29 +576,23 @@ def connected_components(
     # iterative min-label/path-halving loop below runs unchanged; the
     # two paths are result-identical (same min-id canonical labels) and
     # the iterative path stays covered by tests at limit=0.
-    # The probe decides the path AND delivers the driver-path edges,
-    # sized from FREE driver-side metadata (r16): the edges are already
-    # eager-checkpointed, so the block manager knows their cached bytes
-    # (getRDDStorageInfo) without running a job.
-    #  - small cached bytes: plain collect() — one full-scan job over
-    #    the cached blocks, no CollectLimit take-ladder (the r15
-    #    limit(cap+1).collect() ran a 1/4/11-task incremental ladder;
-    #    measured ~2x slower than the straight collect at bench scale);
-    #  - large cached bytes: a count() job decides FIRST, so the
+    # The probe decides the path AND delivers the driver-path edges; no
+    # branch ships more than driver_cc_limit + 1 rows to the driver.
+    #  - large cached bytes (FREE driver-side metadata: the edges are
+    #    already eager-checkpointed, so the block manager knows their
+    #    size without a job): a count() job decides FIRST, so the
     #    over-cap path never ships millions of rows to the driver only
     #    to discard them (r15 ADVICE low);
-    #  - metadata unavailable (never-materialized or foreign RDD): the
-    #    r15 bounded limit+collect, unchanged.
+    #  - otherwise one bounded job: coalesce(1) makes the CollectLimit
+    #    take a single task over the cached blocks that stops after
+    #    cap + 1 rows — no 1/4/11-task take ladder (r15 measured the
+    #    ladder at ~2x a plain collect), and no unbounded collect().
     nbytes = _cached_rdd_bytes(e)
     probe_gate = min(128 * 1024 * 1024, max(driver_cc_limit, 1) * 64)
-    if nbytes is not None and nbytes <= probe_gate:
-        _probe = e.collect()
-        n_edges = len(_probe)
-    elif nbytes is not None:
-        n_edges = e.count()
-        _probe = e.collect() if n_edges <= driver_cc_limit else []
+    if nbytes is not None and nbytes > probe_gate and e.count() > driver_cc_limit:
+        n_edges = driver_cc_limit + 1  # over the cap: no rows shipped
     else:
-        _probe = e.limit(driver_cc_limit + 1).collect()
+        _probe = e.coalesce(1).limit(driver_cc_limit + 1).collect()
         n_edges = len(_probe)
     if n_edges <= driver_cc_limit:
         parent: dict = {}
@@ -635,7 +623,6 @@ def connected_components(
                 else:
                     parent[ru] = rv
         spark = edges.sparkSession
-        LAST_CC_STATS = {"edges": n_edges, "path": "driver", "rounds": 0}
         rows = [(x, find(x)) for x in parent]
         # label type == id type: derive the schema from the edge column
         # (ids may be string or any orderable type, not just long)
@@ -688,7 +675,6 @@ def connected_components(
     # min-of-neighbor-labels is just min(_v) over sym — no join needed.
     labels = halve(sym.groupBy("_u").agg(F.min("_v").alias("_mid")))
     prev_sum = labels.agg(F.sum("_lbl")).first()[0]
-    rounds = 1
     for _ in range(max_iters - 1):
         stepped = (
             sym.join(labels, sym["_v"] == labels["_id"])
@@ -696,12 +682,10 @@ def connected_components(
             .agg(F.min("_lbl").alias("_mid"))
         )
         labels = halve(stepped)
-        rounds += 1
         label_sum = labels.agg(F.sum("_lbl")).first()[0]
         if label_sum == prev_sum:
             break
         prev_sum = label_sum
-    LAST_CC_STATS = {"edges": n_edges, "path": "iterative", "rounds": rounds}
     out = nodes.select(F.col(id_col).alias("_nid")).join(
         labels, F.col("_nid") == F.col("_id"), "left"
     )

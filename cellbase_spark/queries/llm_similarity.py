@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cellbase_spark.io import fan_out_barrier, load_table
+from cellbase_spark.operators import ckpt
 from cellbase_spark.operators.similarity import (
     cosine_expr,
     cosine_topk,
@@ -1083,9 +1084,6 @@ _D2_LEARNED_DUCK = (
 )
 
 
-_PREV_TRAIN = None
-
-
 @register(
     "q_ivf_train",
     family="llm-sim",
@@ -1168,18 +1166,9 @@ def q_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.d").alias("d"),
     )
     # reused 3x (stats, centroid means, iteration-2 reassign): persist
-    # EVICTABLE, previous call's frame released (the graph.py pattern —
-    # eager checkpoints would accumulate non-evictable blocks)
-    global _PREV_TRAIN
-    if _PREV_TRAIN is not None:
-        try:
-            _PREV_TRAIN.unpersist(blocking=False)
-        except Exception:
-            pass
-    from pyspark import StorageLevel
-
-    a1 = a1.persist(StorageLevel.MEMORY_AND_DISK)
-    _PREV_TRAIN = a1
+    # EVICTABLE (eager checkpoints would pin non-evictable blocks); the
+    # build's record unpersists it once the result is gone
+    a1 = ckpt.persist(a1)
     stats1 = a1.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n"), dsum("d", "inertia", 6)
     )

@@ -45,15 +45,13 @@ def register(name: str, oracle: str | None, family: str, doc: str = ""):
             raise ValueError(f"duplicate query key: {name}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # free the PREVIOUS query build's eager-checkpoint blocks
-            # (non-evictable otherwise; see operators/ckpt.py) — all
-            # engine surfaces consume a query's result before building
-            # the next one, so those blocks are dead weight by now
-            from cellbase_spark.operators.ckpt import registry_build, release_prior
+            # the build's record owns the checkpoint blocks and persisted
+            # frames it pins; a later build releases them once the frame
+            # returned here is unreachable (see operators/ckpt.py)
+            from cellbase_spark.operators.ckpt import registry_build
 
-            release_prior()
-            with registry_build():
-                return fn(spark, sf_dir)
+            with registry_build() as build:
+                return build.returned(fn(spark, sf_dir))
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

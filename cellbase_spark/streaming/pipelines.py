@@ -56,11 +56,10 @@ def state_sized_shuffle(spark: SparkSession):
     checkpointed count whatever this scope says, so scoping the conf to
     the start site is both sufficient and safe.
 
-    SINGLE-THREADED ASSUMPTION (same contract as operators/ckpt.py): the
-    conf is session-global, so any batch query planned concurrently in
-    the same session during the stream's run would silently inherit the
-    stream's partition count, and nested/concurrent uses could restore a
-    clobbered value. Every engine surface (driver contract, bench,
+    SINGLE-THREADED ASSUMPTION: the conf is session-global, so any
+    batch query planned concurrently in the same session during the
+    stream's run would silently inherit the stream's partition count,
+    and nested/concurrent uses could restore a clobbered value. Every engine surface (driver contract, bench,
     check_oracle, tests) starts and awaits streams sequentially."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     stores = min(spark.sparkContext.defaultParallelism, STATE_STORES_MAX)

@@ -166,20 +166,20 @@ def main() -> int:
         else:
             print(f"ok   {key}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
             n_pass += 1
-        # Checkpoint-handle leak guard (r9 verdict nit): release_prior()
-        # drains _LIVE at the start of every wrapped build, so after any
-        # single key's build+collect the list holds at most THAT build's
-        # handles. A key that checkpoints per iteration stays small
-        # (pagerank/CC: a handful); a bound of 64 catches a drain
-        # regression at the first leaking key instead of an OOM at key
-        # 200 of the battery.
+        # Checkpoint-handle leak guard (r9 verdict nit): every wrapped
+        # build releases the records of earlier builds whose results are
+        # gone, so after any single key's build+collect only THAT build's
+        # handles remain pinned. A key that checkpoints per iteration
+        # stays small (pagerank/CC: a handful); a bound of 64 catches a
+        # release regression at the first leaking key instead of an OOM
+        # at key 200 of the battery.
         from cellbase_spark.operators import ckpt
 
-        if len(ckpt._LIVE) > 64:  # if/raise, not assert: survives -O
+        if ckpt.pinned() > 64:  # if/raise, not assert: survives -O
             raise RuntimeError(
                 f"eager-checkpoint handle leak after {key}: "
-                f"{len(ckpt._LIVE)} recorded handles (release_prior "
-                "drain regression — see operators/ckpt.py)"
+                f"{ckpt.pinned()} pinned handles (build-record release "
+                "regression — see operators/ckpt.py)"
             )
     print(f"\n{n_pass} ok, {n_fail} FAIL, {n_rowsonly} rows-only")
     return 1 if n_fail else 0

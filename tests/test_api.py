@@ -374,9 +374,10 @@ def test_api_checkpoint_survives_registry_build(spark, sf_dir):
 
     cb = CellBase(spark, sf_dir)
     docs = cb.table("documents")
+    before = ckpt.pinned()
     clusters = docs.dedup_clusters("text")  # API path may checkpoint
-    # API-created checkpoints must NOT be in the registry release list
-    assert not ckpt._LIVE, "API build recorded handles into _LIVE"
+    # API-created checkpoints must NOT land in any registry build record
+    assert ckpt.pinned() == before, "API build recorded handles"
     # run a registered query that itself checkpoints, end-to-end
     REGISTRY["q_sql_recursive"].fn(spark, sf_dir).collect()
     # the API frame is still consumable — its blocks were never freed
@@ -739,21 +740,23 @@ def test_session_memo_dies_with_session():
 
 
 def test_registry_checkpoint_handles_stay_bounded(spark, sf_dir):
-    """Round-10 (r9 verdict nit): release_prior() must BOUND the
-    recorded eager-checkpoint handle list across sequential registry
-    builds — the drain runs at the start of every wrapped build, so
-    after N checkpoint-using queries _LIVE holds at most the LAST
-    build's handles, never the union (the unreleased union is what
-    GC-locked the JVM in round 5). scripts/check_oracle.py asserts the
-    same bound after every key of the full battery."""
+    """Round-10 (r9 verdict nit): the build records must BOUND the
+    pinned eager-checkpoint handles across sequential registry builds —
+    each wrapped build releases the records of earlier builds whose
+    results are gone, so after N build-and-collect calls only the LAST
+    build's handles stay pinned, never the union (the unreleased union
+    is what GC-locked the JVM in round 5). scripts/check_oracle.py
+    asserts the same bound after every key of the full battery."""
     from cellbase_spark.operators import ckpt
     from cellbase_spark.registry import queries
 
     qs = queries()
+    qs["q_agg_groupby"](spark, sf_dir).collect()  # pins nothing itself
+    base = ckpt.pinned()  # records whose results another test still holds
     sizes = []
     for key in ("q_pagerank", "q_cc_iterative", "q_pagerank", "q_dedup_clusters"):
         qs[key](spark, sf_dir).collect()
-        sizes.append(len(ckpt._LIVE))
+        sizes.append(ckpt.pinned() - base)
     # bounded: each build's record is a handful of handles, and it never
     # accumulates across builds (sizes would be monotonically growing)
     assert all(s <= 64 for s in sizes), sizes
@@ -761,9 +764,121 @@ def test_registry_checkpoint_handles_stay_bounded(spark, sf_dir):
         "handles accumulated across sequential registry builds",
         sizes,
     )
-    # an explicit drain empties the record entirely
-    ckpt.release_prior()
-    assert not ckpt._LIVE
+    # a build that pins nothing releases every consumed build's record
+    qs["q_agg_groupby"](spark, sf_dir).collect()
+    assert ckpt.pinned() == base
+
+
+def _oracle_tools():
+    """scripts/check_oracle's DuckDB connection and strict comparison."""
+    import sys
+    from pathlib import Path
+
+    scripts = str(Path(__file__).resolve().parent.parent / "scripts")
+    if scripts not in sys.path:
+        sys.path.insert(0, scripts)
+    import check_oracle
+
+    return check_oracle
+
+
+def test_build_a_build_b_collect_a_stays_oracle_equal(spark, sf_dir):
+    """A registry result whose frame is still held keeps its checkpoint
+    blocks across a later registry build: build q_dedup_simhash, build
+    q_ngram_jaccard (both checkpoint through fan_out_barrier), then
+    collect the first and match its DuckDB oracle."""
+    from cellbase_spark.registry import oracle_sql, queries
+
+    co = _oracle_tools()
+    qs = queries()
+    a = qs["q_dedup_simhash"](spark, sf_dir)
+    qs["q_ngram_jaccard"](spark, sf_dir)
+    got = a.toPandas()
+    con = co.duck_con(sf_dir)
+    try:
+        want = con.sql(oracle_sql()["q_dedup_simhash"]).df()
+    finally:
+        con.close()
+    assert co.compare("q_dedup_simhash", got, want) == []
+
+
+def test_registry_build_releases_consumed_pagerank_adjacency(spark, sf_dir):
+    """q_pagerank's persisted adjacency belongs to its build's record: the
+    first registry build after the collected result is gone unpersists
+    it, instead of it staying cached until q_pagerank runs again."""
+    from cellbase_spark.registry import queries
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds() -> set[int]:
+        return {int(info.id()) for info in jsc.getRDDStorageInfo()}
+
+    qs = queries()
+    before = cached_rdds()
+    qs["q_pagerank"](spark, sf_dir).collect()
+    adjacency = cached_rdds() - before
+    assert adjacency, "q_pagerank persisted nothing"
+    qs["q_agg_groupby"](spark, sf_dir).collect()
+    assert not adjacency & cached_rdds()
+
+
+def test_concurrent_registry_builds_stay_oracle_equal(spark, sf_dir):
+    """2 x defaultParallelism threads share the session, each building and
+    collecting one checkpoint- or persist-using key until a deadline;
+    every result must match its DuckDB oracle. Keys that flip session
+    conf (q_sql_recursive, the stream and fact-layout keys) stay out."""
+    import sys
+    import threading
+    import time
+
+    from cellbase_spark.registry import oracle_sql, queries
+
+    co = _oracle_tools()
+    keys = (
+        "q_dedup_simhash",
+        "q_ngram_jaccard",
+        "q_cc_iterative",
+        "q_dedup_clusters",
+        "q_pagerank",
+        "q_triangle_count",
+        "q_ivf_train",
+    )
+    qs = queries()
+    sqls = oracle_sql()
+    con = co.duck_con(sf_dir)
+    try:  # the two CC keys share one (slow, recursive) oracle
+        by_sql = {q: con.sql(q).df() for q in {sqls[k] for k in keys}}
+    finally:
+        con.close()
+    want = {k: by_sql[sqls[k]] for k in keys}
+    n_threads = 2 * spark.sparkContext.defaultParallelism
+    runs = [0] * n_threads
+    problems: list = []
+    deadline = time.monotonic() + 10
+
+    def work(i: int) -> None:
+        key = keys[i % len(keys)]
+        try:
+            while not runs[i] or time.monotonic() < deadline:
+                got = qs[key](spark, sf_dir).toPandas()
+                problems.extend((key, p) for p in co.compare(key, got, want[key]))
+                runs[i] += 1
+        except Exception as exc:  # surfaced by the assertion below
+            problems.append((key, repr(exc)[:500]))
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(n_threads)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the record bookkeeping finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=180)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads), "a build thread hung"
+    assert not problems, problems
+    assert all(runs), runs
 
 
 def test_facade_ann_compaction_lifecycle(spark, sf_dir, tmp_path):

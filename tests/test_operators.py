@@ -209,6 +209,39 @@ def test_connected_components_string_ids_fast_path(spark):
     }
 
 
+def test_connected_components_probe_ships_at_most_limit_plus_one(spark, monkeypatch):
+    """ADVICE r16 #1: with the cached edge bytes under the probe gate, no
+    collect may return more than driver_cc_limit + 1 rows, and the
+    labels must equal those of the default limit's driver path."""
+    from cellbase_spark.operators import dedup
+
+    nodes = spark.createDataFrame([(i,) for i in range(40)], "id long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(39) if i != 19], "id_a long, id_b long"
+    )
+
+    def labels(df):
+        return {r["id"]: (r["cluster_id"], r["is_canonical"]) for r in df.collect()}
+
+    want = labels(dedup.connected_components(nodes, edges, id_col="id"))
+    limit = 5
+    cls = type(nodes)
+    real_collect = cls.collect
+    shipped: list[int] = []
+
+    def counting_collect(self):
+        rows = real_collect(self)
+        shipped.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(dedup, "_cached_rdd_bytes", lambda df: 1)
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    out = dedup.connected_components(nodes, edges, id_col="id", driver_cc_limit=limit)
+    monkeypatch.undo()
+    assert shipped and max(shipped) <= limit + 1, shipped
+    assert labels(out) == want
+
+
 def test_canonical_selection_policy_on_handbuilt_groups(spark, tmp_path):
     """q_dedup_canonical's survival policy on hand-built duplicate groups:
     within each near-dup cluster the winner is (n_chars desc, doc_id asc)
